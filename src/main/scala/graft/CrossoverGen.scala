@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Generates a stress-scale synthetic data dir with the SAME table schemas
@@ -28,13 +27,7 @@ object CrossoverGen {
     val nEvents = args.lift(1).map(_.toLong).getOrElse(10000000L)
     val nDocs   = args.lift(2).map(_.toLong).getOrElse(500000L)
     val nVecs   = args.lift(3).map(_.toLong).getOrElse(200000L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-crossover-gen").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val t0     = 1704067200000L // 2024-01-01T00:00:00Z, same epoch as testdata
     val spanMs = 30L * 86400000L

@@ -1,62 +1,49 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 
 /** Dev A/B harness: time the named queries under two execution modes,
   * interleaved ABAB in one JVM (the NOTES.md same-window protocol), min per
   * mode. Modes: `on` (AQE on, the bench default), `off` (AQE off for the
-  * final action), `gate` (graft.core.AdaptiveGate decides per plan).
+  * final action), `off<N>` (AQE off and shuffle width N for the final
+  * action), `gate` (the engine's policy, [[Harness.run]]).
   *
   * Usage: sbt "runMain graft.DevAB <modeA> <modeB> <reps> [query ...]"
+  * (all queries when none given).
   */
 object DevAB {
   def main(args: Array[String]): Unit = {
     val modeA = args(0); val modeB = args(1); val reps = args(2).toInt
-    val names = args.drop(3).toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val selected = SparkEntry.queries.filter(kv => names(kv._1)).toSeq.sortBy(_._1)
-    def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+    val spark = Harness.session()
+    def write(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    def run(fn: (org.apache.spark.sql.SparkSession, String) => DataFrame,
             mode: String): Double = {
       val t0 = System.nanoTime()
-      graft.pipeline.Dedup.withMaterialized {
-        val df = fn(spark, sfDir)
-        def write(): Unit = df.write.format("noop").mode("overwrite").save()
-        mode match {
-          case "on" => write()
-          case "off" =>
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            try write() finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-          case s if s.startsWith("off") =>
-            // off<N>: AQE off + static shuffle.partitions=N for the action
-            val p = s.drop(3)
-            val prev = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            spark.conf.set("spark.sql.shuffle.partitions", p)
-            try write() finally {
-              spark.conf.set("spark.sql.adaptive.enabled", "true")
-              spark.conf.set("spark.sql.shuffle.partitions", prev)
-            }
-          case "gate" => graft.core.AdaptiveGate.withGatedExecution(df)(write())
+      mode match {
+        case "gate" => Harness.run(spark, fn, sfDir)(write)
+        case "on" => graft.pipeline.Dedup.withMaterialized(write(fn(spark, sfDir)))
+        case s if s.startsWith("off") => graft.pipeline.Dedup.withMaterialized {
+          val df = fn(spark, sfDir)
+          val prev = spark.conf.get("spark.sql.shuffle.partitions")
+          spark.conf.set("spark.sql.adaptive.enabled", "false")
+          if (s != "off") spark.conf.set("spark.sql.shuffle.partitions", s.drop(3))
+          try write(df) finally {
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+          }
         }
       }
       (System.nanoTime() - t0) / 1e9
     }
-    selected.foreach { case (name, fn) =>
+    Harness.queries(args.drop(3).toSet).foreach { case (name, fn) =>
       // warmup once per query under mode A (JIT/codegen), discarded
-      run(name, fn, modeA); System.gc()
+      run(fn, modeA); System.gc()
       val as = collection.mutable.Buffer[Double]()
       val bs = collection.mutable.Buffer[Double]()
       (1 to reps).foreach { _ =>
-        as += run(name, fn, modeA); System.gc()
-        bs += run(name, fn, modeB); System.gc()
+        as += run(fn, modeA); System.gc()
+        bs += run(fn, modeB); System.gc()
       }
       println(f"$name%-24s $modeA=${as.min}%.3f $modeB=${bs.min}%.3f ratio=${bs.min / as.min}%.2f  rawA=${as.map(x => f"$x%.3f").mkString(",")} rawB=${bs.map(x => f"$x%.3f").mkString(",")}")
     }

@@ -2,12 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `.explain("formatted")` output for the named queries to
-  * files (the optimization-round plan evidence). Session shape matches
-  * graft.Bench (local[$SPARK_GRAFT_CPUS], shuffle.partitions = cpus) so the
-  * dumped plans are the plans the bench actually runs.
+  * files (the optimization-round plan evidence). The session is
+  * [[Harness.session]], the one Bench runs under, so the dumped plans are
+  * the plans the bench actually runs.
   *
   * Usage: sbt "runMain graft.PlanDump <outDir> <suffix> [query ...]"
   * writes <outDir>/<query>_<suffix>.txt for each query (all queries when
@@ -17,27 +15,16 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
-    val only = args.drop(2).toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     Files.createDirectories(Paths.get(outDir))
-    val selected =
-      if (only.isEmpty) SparkEntry.queries else SparkEntry.queries.filter(kv => only(kv._1))
-    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try graft.pipeline.Dedup.withMaterialized {
-        val df = fn(spark, sfDir)
-        // print the plan the bench's gated action actually executes: the
-        // gate toggles session conf around the final action, and a write
-        // builds a fresh QueryExecution under that conf — reanalyze() is
-        // that rebuild, minus the write
-        val plan = graft.core.AdaptiveGate.withGatedExecution(df) {
+    Harness.queries(args.drop(2).toSet).foreach { case (name, fn) =>
+      // print the plan the bench's gated action actually executes: the
+      // gate toggles session conf around the final action, and a write
+      // builds a fresh QueryExecution under that conf — reanalyze() is
+      // that rebuild, minus the write
+      try {
+        val plan = Harness.run(spark, fn, sfDir) { df =>
           org.apache.spark.sql.graftbridge.Bridge.reanalyze(df)
             .queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode)

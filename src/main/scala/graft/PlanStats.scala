@@ -1,32 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical._
 
 /** Dev tool: one line of logical-plan shape statistics per query — the
   * evidence base for any plan-derived session heuristic (what fraction of
   * the inventory has joins / generates / checkpoint leaves, and how big
-  * the leaf scans are). Session shape matches graft.Bench.
+  * the leaf scans are). Runs under [[Harness]], like graft.Bench.
   *
   * Usage: sbt "runMain graft.PlanStats [query ...]"
   */
 object PlanStats {
   def main(args: Array[String]): Unit = {
-    val only = args.toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val selected =
-      if (only.isEmpty) SparkEntry.queries else SparkEntry.queries.filter(kv => only(kv._1))
-    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try graft.pipeline.Dedup.withMaterialized {
-        val plan = fn(spark, sfDir).queryExecution.analyzed
+    val spark = Harness.session()
+    Harness.queries(args.toSet).foreach { case (name, fn) =>
+      try Harness.run(spark, fn, sfDir) { df =>
+        val plan = df.queryExecution.analyzed
         var joins, gens, rdds, windows, aggs, leaves = 0
         var bytes = BigInt(0)
         plan.foreach {

@@ -20,13 +20,7 @@ object RecallBench {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/crossover_sf10")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-recall-bench").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // fixture 1 — the CrossoverGen corpus: hash-UNIFORM vectors, the
     // structureless regime where cell pruning has nothing to exploit

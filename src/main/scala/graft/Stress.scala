@@ -6,7 +6,7 @@ import graft.ops.{AsOfJoin, RangeJoin, Resampler}
 import graft.pipeline.Privacy
 import graft.ops.Resampler.ResampleOptions
 import graft.sources.FrameSource
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale smoke: drives the flagship paths (fuse → resample → ffill, as-of,
@@ -44,13 +44,7 @@ object Stress {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(10000000L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-stress").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
 
     val t0     = 1600000000000L

@@ -35,32 +35,21 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    rows past the leaf estimate; conservative, so expansion near the
   *    threshold errs toward keeping AQE on).
   *
-  * The threshold is SCALE-DERIVED, not tuned to a fixture: it follows
-  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (overridable via
-  * `spark.graft.adaptive.smallPlanBytes`), so production-size inputs keep
-  * AQE on unconditionally and the gate moves with the same knob that
-  * governs AQE's own partition sizing.
+  * The threshold is SCALE-DERIVED, not tuned to a fixture: it is
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (parsed and validated
+  * by Spark itself), so production-size inputs keep AQE on unconditionally
+  * and the gate moves with the same knob that governs AQE's own partition
+  * sizing. The gate has no switch of its own; the ungated side of an A/B is
+  * `graft.DevAB`'s `on` mode.
   */
 object AdaptiveGate {
-
-  private val ThresholdKey = "spark.graft.adaptive.smallPlanBytes"
-
-  /** Ops escape hatch (and the A/B lever for measuring the gate itself):
-    * SPARK_GRAFT_ADAPTIVE_GATE=off makes the gate a no-op everywhere.
-    */
-  private val envOff: Boolean =
-    sys.env.get("SPARK_GRAFT_ADAPTIVE_GATE").contains("off")
 
   /** True iff the static single-partition plan is already optimal for
     * `df`'s final action (see object doc).
     */
   def staticPlanSufficient(df: DataFrame): Boolean = {
-    if (envOff) return false
-    val spark = df.sparkSession
-    val threshold = BigInt(
-      spark.conf.getOption(ThresholdKey).map(_.toLong).getOrElse(
-        spark.sessionState.conf.getConf(
-          org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)))
+    val threshold = BigInt(df.sparkSession.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
     // the analyzed plan is computed eagerly at Dataset construction, so
     // this walk adds no planning work to the timed action
     val plan = df.queryExecution.analyzed

@@ -54,9 +54,6 @@ case class NormalizeForDedup(child: Expression) extends UnaryExpression {
 
 object NormalizeForDedup {
 
-  private def isAsciiWs(b: Byte): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
-
   /** Static kernel invoked from generated code. */
   def normalize(s: UTF8String): UTF8String = {
     val bytes = s.getBytes

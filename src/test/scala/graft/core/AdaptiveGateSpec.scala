@@ -40,9 +40,9 @@ class AdaptiveGateSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("gate").toString
     tinyFrame.write.mode("overwrite").parquet(s"$dir/t.parquet")
     val df = spark.read.parquet(s"$dir/t.parquet").filter(col("id") > 1)
-    spark.conf.set("spark.graft.adaptive.smallPlanBytes", "1")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")
     try assert(!AdaptiveGate.staticPlanSufficient(df))
-    finally spark.conf.unset("spark.graft.adaptive.smallPlanBytes")
+    finally spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
   }
 
   test("nested generates scale the size estimate; siblings do not compound") {
@@ -59,14 +59,14 @@ class AdaptiveGateSpec extends SparkTestBase {
       .iterator().asScala.filter(_.toString.endsWith(".parquet")).map(
         p => java.nio.file.Files.size(p)).sum
     // threshold between 8x and 64x the leaf: depth-1 plans pass, depth-2 not
-    spark.conf.set("spark.graft.adaptive.smallPlanBytes", (leaf * 32).toString)
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", (leaf * 32).toString)
     try {
       assert(AdaptiveGate.staticPlanSufficient(one))
       assert(AdaptiveGate.staticPlanSufficient(sib),
         "sibling explodes in union branches must not compound")
       assert(!AdaptiveGate.staticPlanSufficient(nested),
         "nested explodes must compound")
-    } finally spark.conf.unset("spark.graft.adaptive.smallPlanBytes")
+    } finally spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
   }
 
   test("gated execution restores session conf and preserves results") {
