@@ -94,28 +94,22 @@ object Fuser {
       .sortBy(_.descriptor).toSeq
   }
 
-  /** Load + fuse path-based sources. Parquet sources without a declared
-    * `secondarySortCol` get a recompute-stable file-order row id attached
-    * (see `SourceLoader.parquetRowId`) so the fused tie order is
-    * deterministic across actions and task retries.
+  /** Load + fuse path-based sources. Parquet sources read from a flat file
+    * listing, without a declared `secondarySortCol`, get a recompute-stable
+    * file-order row id attached (see `SourceLoader.parquetRowId`) so the
+    * fused tie order is deterministic across actions and task retries.
     */
   def fuse(spark: SparkSession, specs: Seq[SourceSpec], opts: FuseOptions): FuseResult =
     fuseFrames(
       specs.map { s =>
-        var df = SourceLoader.load(spark, s)
-        if (s.secondarySortCol.isEmpty && s.format == "parquet")
-          // Narrow catch: only the known unresolvable-`_metadata` case
-          // (forceSchema/partitioned loads project it away) falls back to the
-          // legacy id — any OTHER analysis failure (e.g. a column conflict),
-          // a bad regex or an FS failure must propagate, not silently demote
-          // the determinism guarantee.
-          try df = df.withColumn(RowIdCol, SourceLoader.parquetRowId(spark, s.path,
-            s.fileSortRegex, s.fileSortIdx))
-          catch {
-            case e: org.apache.spark.sql.AnalysisException
-                if e.getMessage.contains("_metadata") ||
-                   Option(e.getCondition).exists(_.contains("UNRESOLVED_COLUMN")) => ()
-          }
+        val (loaded, scanned) = SourceLoader.loadListed(spark, s)
+        // Only a plain parquet scan carries `_metadata`; the partitioned
+        // layout and forceSchema's per-file union keep the legacy id.
+        val df = scanned match {
+          case Some(files) if s.secondarySortCol.isEmpty =>
+            loaded.withColumn(RowIdCol, SourceLoader.parquetRowId(s.path, files))
+          case _ => loaded
+        }
         FrameSource(df, s.descriptor, s.timestampCol,
           tsConvert = s.tsConvert, removeCols = s.removeCols,
           secondarySortCol = s.secondarySortCol)

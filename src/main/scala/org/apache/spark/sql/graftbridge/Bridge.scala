@@ -1,8 +1,17 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.errors.QueryCompilationErrors
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileFormat, FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.SchemaUtils
 
 /** Column ⇄ Expression bridge for custom Catalyst expressions.
   *
@@ -92,4 +101,62 @@ object Bridge {
             lr.outputOrdering, lr.isStreaming, lr.stream)(session, None, None))
       case _ => df
     }
+
+  /** Read files the caller has already listed (`csv`, `json` or `parquet`)
+    * as one file-source relation, without Spark listing them again.
+    *
+    * `spark.read.format(f).load(paths: _*)` re-lists every path it is
+    * given, and above `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * (32) paths it does so as a distributed job with one task per file. Here
+    * the file index is seeded from `files`' own statuses, so building the
+    * relation lists nothing. The rest is what `DataSource.resolveRelation`
+    * does for a read: schema inference when `schema` is None (a parquet
+    * footer job, a CSV/JSON sampling pass), a nullable data schema, the
+    * duplicate-column and `verifySchema` checks, and a `LogicalRelation`,
+    * so `_metadata` columns resolve exactly as after `spark.read`.
+    */
+  def readListed(
+      spark: SparkSession,
+      format: String,
+      files: Seq[FileStatus],
+      schema: Option[StructType],
+      options: Map[String, String]): DataFrame = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val fileFormat: FileFormat = format match {
+      case "csv"     => new CSVFileFormat
+      case "json"    => new JsonFileFormat
+      case "parquet" => new ParquetFileFormat
+      case other     => throw new IllegalArgumentException(s"readListed: unsupported format $other")
+    }
+    // Block locations for split locality, attached as Spark's own listing
+    // attaches them to a plain status (this constructor skips the
+    // permission lookup, which the local file system serves by a subprocess)
+    lazy val hadoopConf = session.sessionState.newHadoopConfWithOptions(options)
+    def located(f: FileStatus): FileStatus = f match {
+      case _: LocatedFileStatus => f
+      case _ if session.sessionState.conf.ignoreDataLocality => f
+      case _ =>
+        val fs = f.getPath.getFileSystem(hadoopConf)
+        new LocatedFileStatus(f.getLen, f.isDirectory, f.getReplication, f.getBlockSize,
+          f.getModificationTime, 0, null, null, null, null, f.getPath,
+          fs.getFileBlockLocations(f, 0, f.getLen))
+    }
+    val leaves = files.map(f => f.getPath -> Array(located(f))).toMap
+    val listed = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = leaves.get(path)
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(session, files.map(_.getPath), options, schema, listed)
+    val dataSchema = schema
+      .orElse(fileFormat.inferSchema(session, options, index.allFiles()))
+      .getOrElse(throw QueryCompilationErrors.dataSchemaNotSpecifiedError(format))
+    val relation = HadoopFsRelation(index, index.partitionSchema, dataSchema.asNullable,
+      bucketSpec = None, fileFormat, CaseInsensitiveMap(options))(session)
+    val resolver = session.sessionState.conf.resolver
+    SchemaUtils.checkSchemaColumnNameDuplication(relation.dataSchema, resolver)
+    SchemaUtils.checkSchemaColumnNameDuplication(relation.partitionSchema, resolver)
+    DataSourceUtils.verifySchema(fileFormat, relation.dataSchema, readOnly = true)
+    session.baseRelationToDataFrame(relation)
+  }
 }

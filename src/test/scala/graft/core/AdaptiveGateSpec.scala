@@ -77,11 +77,20 @@ class AdaptiveGateSpec extends SparkTestBase {
     val plain = df.collect().toSeq
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     var partsInside: String = null
+    var planInside: org.apache.spark.sql.execution.SparkPlan = null
     val gated = AdaptiveGate.withGatedExecution(df) {
       partsInside = spark.conf.get("spark.sql.shuffle.partitions")
-      df.collect().toSeq
+      // `df`'s plan was compiled by the collect above; a rebuilt frame is
+      // planned under the gate's conf, as a write inside the gate would be
+      val fresh = org.apache.spark.sql.graftbridge.Bridge.reanalyze(df)
+      val rows = fresh.collect().toSeq
+      planInside = fresh.queryExecution.executedPlan
+      rows
     }
     assert(partsInside == "1", "gate must derive a single partition")
+    assert(planInside.collectFirst {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a
+    }.isEmpty, s"gated plan must be static:\n$planInside")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == prevParts)
     assert(spark.conf.get("spark.sql.adaptive.enabled", "true") == "true")
     assert(gated == plain)

@@ -161,4 +161,17 @@ class FuserSpec extends SparkTestBase {
     val byFile = ids.groupBy(_ >> 40)
     assert(byFile.size == 2, s"expected 2 file groups, got $byFile")
   }
+
+  test("a partitioned parquet source fuses without the file-order row id") {
+    // the partitioned layout is read through Spark's partition discovery; no
+    // flat listing exists to key a file-order id on, so the legacy id is used
+    val d = java.nio.file.Files.createTempDirectory("graft_fuse_part").toString + "/src"
+    Seq((3000L, "c", 2), (1000L, "a", 1), (2000L, "b", 2)).toDF("t", "v", "part")
+      .write.partitionBy("part").parquet(d)
+    val spec = graft.sources.SourceSpec(path = d, format = "parquet",
+      descriptor = "p", timestampCol = "t")
+    val df = Fuser.fuse(spark, Seq(spec), FuseOptions()).df
+    assert(df.select(TimestampCol).collect().map(_.getLong(0)).toSeq ==
+      Seq(1000L, 2000L, 3000L))
+  }
 }

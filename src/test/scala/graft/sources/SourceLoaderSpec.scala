@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkTestBase
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 import java.nio.file.{Files, Paths}
@@ -269,6 +270,65 @@ class SourceLoaderSpec extends SparkTestBase {
       Seq(FrameSource(df, "jdocs", "ts"))).df
     assert(fused.select(graft.core.Fuser.TimestampCol).collect()
       .map(_.getLong(0)).toSeq == Seq(1L, 5L))
+  }
+
+  test("a 40-file gzip CSV source loads from graft's own listing: no Spark job") {
+    // 40 files is above Spark's 32-path parallel listing threshold, where
+    // `spark.read` lists the files again as a distributed job.
+    val d = Files.createTempDirectory("graft_many_gz").toString
+    val gz = (0 until 40).map { h =>
+      val f = Paths.get(d, f"hour-$h%02d.csv.gz")
+      val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(f))
+      out.write(("Timestamp,V\n" +
+        (0 until 3).map(i => s"${h * 1000 + i},v$h-$i\n").mkString).getBytes("UTF-8"))
+      out.close()
+      f.toUri.toString
+    }
+    // a stray file in the source dir is never listed, so never read
+    Files.writeString(Paths.get(d, "notes.txt"), "Timestamp,V\n1,stray\n")
+    val spec = SourceSpec(path = d, format = "csv", descriptor = "g",
+      timestampCol = "Timestamp", fileSortRegex = Some("\\d+"),
+      positionalTypes = Some(Seq(LongType, StringType)))
+    val sc = spark.sparkContext
+    val (df, jobs) = org.apache.spark.graftest.Jobs.count(sc)(SourceLoader.load(spark, spec))
+    assert(jobs == 0, s"SourceLoader.load launched $jobs jobs")
+
+    val schema = StructType(Seq(StructField("Timestamp", LongType), StructField("V", StringType)))
+    val (direct, directJobs) = org.apache.spark.graftest.Jobs.count(sc)(
+      spark.read.option("header", "true").schema(schema).csv(gz: _*))
+    assert(directJobs > 0, "the fixture must sit above the parallel listing threshold")
+    def rows(f: org.apache.spark.sql.DataFrame) =
+      f.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+    assert(rows(df) == rows(direct))
+    assert(rows(df).length == 120)
+    assert(df.select("_metadata.file_name").distinct().collect().map(_.getString(0)).sorted.toSeq ==
+      (0 until 40).map(h => f"hour-$h%02d.csv.gz"))
+  }
+
+  test("parquet loads keep _metadata: per-file caps and the file-order row id") {
+    import spark.implicits._
+    val d = Files.createTempDirectory("graft_pq_meta").toString + "/src"
+    Seq((1000L, "a1"), (2000L, "a2"), (3000L, "a3")).toDF("t", "v")
+      .coalesce(1).write.parquet(d)
+    Seq((1500L, "b1"), (2500L, "b2")).toDF("t", "v")
+      .coalesce(1).write.mode("append").parquet(d)
+    val spec = SourceSpec(path = d, descriptor = "p", timestampCol = "t")
+    val listed = SourceLoader.listSourceFiles(spark, d, "parquet")
+    val (df, scanned) = SourceLoader.loadListed(spark, spec)
+    assert(scanned.contains(listed))
+    val meta = df.select(col("_metadata.file_name"), col("_metadata.row_index"), col("v"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
+    val names = listed.map(f => new org.apache.hadoop.fs.Path(f).getName)
+    assert(meta.map(_._1) == names.toSet)
+    assert(meta.map(m => (m._2, m._3)) ==
+      Set((0L, "a1"), (1L, "a2"), (2L, "a3"), (0L, "b1"), (1L, "b2")))
+    // numRows filters on _metadata.row_index: each file's first row
+    assert(SourceLoader.load(spark, spec.copy(numRows = Some(1))).count() == 2)
+    val ids = df.withColumn("id", SourceLoader.parquetRowId(d, listed))
+      .select(col("_metadata.file_name"), col("_metadata.row_index"), col("id")).collect()
+    ids.foreach { r =>
+      assert(r.getLong(2) == (names.indexOf(r.getString(0)).toLong << 40) + r.getLong(1))
+    }
   }
 
   test("friendly type mapping (classes.py:95-100)") {
